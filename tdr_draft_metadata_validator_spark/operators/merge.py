@@ -173,14 +173,19 @@ def write_violations_json(
     touches partitions present in the written frame, so a now-clean
     partition would otherwise keep its old violation rows). Driver-side
     Hadoop-FS deletes over <= P directories — storage-agnostic and O(P).
+    The written partition ids are observed on the write itself (no second
+    job over ``merged``).
     """
     if n_logical_partitions:
+        from pyspark.sql import Observation
+
         from ..plans.metrics import logical_partition
 
+        written = Observation()
         with_pid = merged.withColumn(
             "partition_id",
             logical_partition(F.col("asset_id"), n_logical_partitions),
-        )
+        ).observe(written, F.collect_set("partition_id").alias("ids"))
         (
             with_pid.write.mode(mode)
             .option("partitionOverwriteMode", "dynamic")
@@ -188,9 +193,7 @@ def write_violations_json(
             .json(path)
         )
         if validated_partitions is not None:
-            present = {
-                int(r[0]) for r in with_pid.select("partition_id").distinct().collect()
-            }
+            present = set(written.get["ids"])
             stale = [p for p in validated_partitions if p not in present]
             if stale:
                 spark = merged.sparkSession

@@ -7,6 +7,7 @@ Local-mode testing defaults; the same builder config is what we'd ship in
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -105,8 +106,9 @@ def _prewarm_python_workers(spark: SparkSession, cores: int) -> None:
         spark.range(cores, numPartitions=cores).mapInPandas(
             _ident, "id long"
         ).count()
-    except Exception:  # never let a warmup failure break session build
-        pass
+    except Exception as exc:  # never let a warmup failure break session build
+        print(f"warning: Python worker pre-warm failed, the first Arrow stage "
+              f"pays worker start-up instead: {exc!r}", file=sys.stderr)
 
 
 def _core_count(master: str) -> int:

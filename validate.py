@@ -8,7 +8,9 @@
 Reads the clips (+reference) table, runs the full validation, writes:
   {output}/violations/   JSON-lines per-asset violations (scale sink)
   {output}/error-file.json  single-document verdict (report sink)
-  {checkpoint}/lineage/  per-partition verdict rows (resume manifest)
+  {checkpoint}/lineage/  per-partition verdict rows (resume manifest):
+                         one parquet file, rewritten and swapped in on
+                         every record
 
 Local smoke: python validate.py --table ... (uses local[32]).
 """
@@ -318,6 +320,7 @@ def _run(args):
     doc_path = os.path.join(args.output, "error-file.json")
 
     mergeds = []
+    n_assets = 0
     overall_error = FileError.NONE
     gate_result = None
     total_wall_ms = 0
@@ -351,6 +354,8 @@ def _run(args):
                 validated_partitions=validated,
             )
             mergeds.append(result.merged)
+            # chunks cover disjoint logical partitions: each asset counts once
+            n_assets += result.extra["n_violation_assets"]
         if result.metrics is not None and args.checkpoint:
             record_partitions(result.metrics, args.checkpoint)
         if not result.passed:
@@ -395,10 +400,12 @@ def _run(args):
         from tdr_draft_metadata_validator_spark.operators.merge import merge_violations
 
         drift_merged = merge_violations(drift_rows, key_name="consignment_id")
-        if not drift_merged.isEmpty():
+        n_drift = drift_merged.count()
+        if n_drift:
             drift_merged.coalesce(1).write.mode("overwrite").json(
                 os.path.join(args.output, "violations-run-level")
             )
+            n_assets += n_drift
             if overall_error == FileError.NONE:
                 overall_error = FileError.SCHEMA_VALIDATION
         else:
@@ -417,7 +424,6 @@ def _run(args):
 
     # single-document verdict (always written — Lambda.scala:81 semantics);
     # guarded for scale: only assembled when the violation count is sane
-    n_assets = merged_all.count() if merged_all is not None else 0
     if n_assets <= 100_000:
         with open(doc_path, "w") as fh:
             fh.write(
