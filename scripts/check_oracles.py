@@ -7,9 +7,11 @@ Usage: python scripts/check_oracles.py [sf_dir] [only_query ...]
 
 from __future__ import annotations
 
+import pathlib
 import sys
 
-sys.path.insert(0, "/root/repo")
+# the checkout this script lives in, wherever it is
+sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
 import duckdb
 import pandas as pd

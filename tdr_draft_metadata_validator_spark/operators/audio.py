@@ -37,13 +37,13 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, functions as F, types as T
+from pyspark.sql import DataFrame, Observation, functions as F, types as T
 
 from ..functions.audio_codec import decode, snr_db, to_mono
 from ..functions.flac_codec import crc16_verify_batch
 from ..messages import resolve
 from ..models import PROCESS_AUDIO
-from .relational import choose_join_side
+from .relational import BROADCAST_LIMIT_BYTES, choose_join_side
 
 _FP_SCHEMA = T.StructType(
     [
@@ -364,13 +364,15 @@ def audio_invariants(
     joined_fp = fp.where(F.col("decode_ok")).join(
         choose_join_side(ref_fp), on="clip_id", how="inner"
     )
-    # eager checkpoint: the residue key set feeds THREE consumers (the
-    # prefer_count sizing below + both payload semi-joins) — without it
-    # the fp-vs-ref_fp join would re-run for each. O(residue keys)
-    # storage, ~20 B/row.
+    # eager checkpoint: the residue key set feeds both payload semi-joins,
+    # which would otherwise each re-run the fp-vs-ref_fp join. O(residue
+    # keys) storage, ~20 B/row. The checkpoint's own action also counts
+    # the residue (an Observation), which sizes the broadcast below.
+    residue = Observation()
     mismatched = (
         joined_fp.where(F.col("pcm_sha1") != F.col("ref_sha1"))
         .select("clip_id")
+        .observe(residue, F.count(F.lit(1)).alias("n"))
         .localCheckpoint(eager=True)
     )
 
@@ -379,20 +381,17 @@ def audio_invariants(
     # same layout, so hash equality <=> bit-identical audio <=> SNR=inf.
 
     # ---- stage 3: exact SNR only for the residue -------------------------
-    # Stats-driven broadcast of the residue key set (cheap: computed from
-    # the checkpointed fingerprints, no second decode). Broadcast keeps
-    # the multi-TB payload sides UNSHUFFLED through the semi-joins — the
-    # whole point of the fingerprint screen (a shuffle semi-join would
-    # move every payload byte; measured +2x wall at 240k clips). With real
-    # lossy decoders the residue is ~every lossy row: then the estimate
-    # exceeds the broadcast limit and we fall back to a shuffle semi-join
-    # instead of OOMing the driver.
-    # prefer_count: ``mismatched`` is join-derived, so its Catalyst size
-    # estimate is a selectivity guess that can land between the broadcast
-    # limit and the 2^62 sentinel — neither broadcasting nor counting —
-    # and the residue semi-joins would then shuffle full audio payloads.
-    # The count is cheap here (lineage ends at the eager localCheckpoint).
-    cand = choose_join_side(mismatched, est_row_bytes=48, prefer_count=True)
+    # Broadcast of the residue key set, sized from the observed count
+    # (~48 B/key) rather than from the plan: ``mismatched`` is
+    # join-derived, so its Catalyst size estimate is a selectivity guess.
+    # Broadcast keeps the multi-TB payload sides UNSHUFFLED through the
+    # semi-joins — the whole point of the fingerprint screen (a shuffle
+    # semi-join would move every payload byte; measured +2x wall at 240k
+    # clips). With real lossy decoders the residue is ~every lossy row:
+    # then the estimate exceeds the broadcast limit and we fall back to a
+    # shuffle semi-join instead of OOMing the driver.
+    cand = (F.broadcast(mismatched)
+            if residue.get["n"] * 48 <= BROADCAST_LIMIT_BYTES else mismatched)
     cand_clips = clips.select(F.col(key).alias("clip_id"), "bytes", "codec").join(
         cand, on="clip_id", how="left_semi"
     )
@@ -486,6 +485,7 @@ def _transcript_check(clips: DataFrame, ref: DataFrame, key: str) -> DataFrame:
 
 
 def has_undecodable(violations: DataFrame) -> bool:
-    """Cheap post-hoc gate decision (UTF-8 analog) on the already-
-    materialized violation rows — never a second scan of ``bytes``."""
+    """Gate decision (UTF-8 analog) on already-materialized violation
+    rows — never a second scan of ``bytes``. One job; ``plans.engine``
+    observes the same count on its checkpoint action instead."""
     return not violations.where(F.col("error_key") == "undecodable").isEmpty()

@@ -172,7 +172,8 @@ def write_violations_json(
     get their stale output directory deleted (dynamic overwrite only
     touches partitions present in the written frame, so a now-clean
     partition would otherwise keep its old violation rows). Driver-side
-    Hadoop-FS deletes over <= P directories — storage-agnostic and O(P).
+    Hadoop FS: one listing of ``path``, then a delete for each stale
+    directory that exists — storage-agnostic and O(P).
     The written partition ids are observed on the write itself (no second
     job over ``merged``).
     """
@@ -194,20 +195,19 @@ def write_violations_json(
         )
         if validated_partitions is not None:
             present = set(written.get["ids"])
-            stale = [p for p in validated_partitions if p not in present]
+            stale = {f"partition_id={p}" for p in validated_partitions
+                     if p not in present}
             if stale:
                 spark = merged.sparkSession
-                jvm = spark._jvm
                 # resolve the FS from the OUTPUT path (FileSystem.get(conf)
                 # is the default scheme's FS — "Wrong FS" on s3a:// output
                 # with an HDFS/local default, crashing an otherwise-clean
                 # run after the violations write)
-                fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-                    spark._jsc.hadoopConfiguration()
-                )
-                for p in stale:
-                    hp = jvm.org.apache.hadoop.fs.Path(f"{path}/partition_id={p}")
-                    if fs.exists(hp):
-                        fs.delete(hp, True)
+                root = spark._jvm.org.apache.hadoop.fs.Path(path)
+                fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+                for st in fs.listStatus(root):
+                    child = st.getPath()
+                    if child.getName() in stale:
+                        fs.delete(child, True)
     else:
         merged.write.mode(mode).json(path)

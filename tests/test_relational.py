@@ -45,3 +45,39 @@ def test_protected_fields(spark):
     # data payload echoes the offending submitted value
     row = [r for r in v if r["property"] == "sr_hz"][0]
     assert row["data"][0]["value"] == "12345"
+
+
+def _broadcast_hinted(df) -> bool:
+    return "strategy=broadcast" in df._jdf.queryExecution().analyzed().toString()
+
+
+def _parquet_ref_keys(spark, tmp_path):
+    path = str(tmp_path / "ref_keys")
+    datagen.ref_df(spark, datagen.ref_batch(np.arange(8))).select("clip_id") \
+        .write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_choose_join_side_small_frame_is_left_to_the_planner(spark, tmp_path, jobs_in_group):
+    """A table scan carries its size in the plan statistics: the decision
+    costs no job, and below AQE_TRUST_BYTES the frame comes back unhinted."""
+    ref = _parquet_ref_keys(spark, tmp_path)
+    out, jobs = jobs_in_group("cjs-small", lambda: R.choose_join_side(ref))
+    assert jobs == 0
+    assert out is ref and not _broadcast_hinted(out)
+
+
+def test_choose_join_side_hints_broadcast_in_the_band(spark, tmp_path, monkeypatch,
+                                                     jobs_in_group):
+    """Between AQE_TRUST_BYTES and the broadcast limit the planner would
+    refuse to broadcast on its own, so the hint is forced — still from the
+    plan statistics, with no job; above the limit the frame is left alone."""
+    ref = _parquet_ref_keys(spark, tmp_path)
+    monkeypatch.setattr(R, "AQE_TRUST_BYTES", 1)
+    out, jobs = jobs_in_group("cjs-band", lambda: R.choose_join_side(ref))
+    assert jobs == 0
+    assert _broadcast_hinted(out)
+    out, jobs = jobs_in_group(
+        "cjs-over", lambda: R.choose_join_side(ref, limit_bytes=2))
+    assert jobs == 0
+    assert out is ref

@@ -161,6 +161,31 @@ def main(argv=None):
 
 
 def _run(args):
+    from tdr_draft_metadata_validator_spark.operators.gates import (
+        release_parse_caches,
+    )
+    from tdr_draft_metadata_validator_spark.session import get_spark
+
+    from pyspark.sql import SparkSession
+
+    preexisting = SparkSession.getActiveSession() is not None
+    spark = get_spark(app_name=f"validate-{args.run_id}")
+    mergeds: list = []  # the engine persists each chunk's merge
+    try:
+        return _validate_run(args, spark, mergeds)
+    finally:
+        # every exit path, gate trips and exceptions included: a long-lived
+        # session must not keep earlier chunks' merges cached
+        for m in mergeds:
+            m.unpersist()
+        release_parse_caches()  # drop any CSV parse cache the ingest gate kept
+        if not preexisting:
+            spark.stop()
+
+
+def _validate_run(args, spark, mergeds: list) -> int:
+    """The run itself; appends each chunk's persisted merge to ``mergeds``
+    so :func:`_run` can release them."""
     from tdr_draft_metadata_validator_spark import __version__ as engine_version
     from tdr_draft_metadata_validator_spark.models import FileError, ValidationParameters
     from tdr_draft_metadata_validator_spark.operators.merge import (
@@ -168,23 +193,18 @@ def _run(args):
         write_violations_json,
     )
     from tdr_draft_metadata_validator_spark.plans.checkpoint import (
-        failed_partitions,
+        filter_resume,
         filter_to_partitions,
+        manifest_rows,
+        partitions_with,
         record_partitions,
-        resume_run,
     )
     from tdr_draft_metadata_validator_spark.plans.engine import validate
-    from tdr_draft_metadata_validator_spark.session import get_spark
     from tdr_draft_metadata_validator_spark.sources.tables import (
         read_clips,
         read_iceberg,
         read_ref_clips,
     )
-
-    from pyspark.sql import SparkSession
-
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name=f"validate-{args.run_id}")
 
     snapshot_id = args.snapshot_id
     if args.table.startswith("iceberg:"):
@@ -246,15 +266,16 @@ def _run(args):
     clips_full = incremental_drift_frame if incremental_drift_frame is not None else clips
 
     done: list[int] = []
+    # the lineage manifest as last read or written: the resume read, then
+    # each chunk's record — the verdict below reads it from here
+    lineage = []
     if args.resume and args.checkpoint:
-        clips, done = resume_run(
-            spark, clips, args.checkpoint, args.run_id, args.partitions
-        )
-        if ref is not None and done:
+        lineage = manifest_rows(spark, args.checkpoint)
+        done = partitions_with(lineage, args.run_id, passed=True)
+        clips = filter_resume(clips, done, args.partitions)
+        if ref is not None:
             # the reference side must shrink to the same work list, or the
             # missing-rows anti-join re-flags every already-verified clip
-            from tdr_draft_metadata_validator_spark.plans.checkpoint import filter_resume
-
             ref = filter_resume(ref, done, args.partitions, key="clip_id")
         print(f"resume: {len(done)} partitions already verified", file=sys.stderr)
 
@@ -319,7 +340,6 @@ def _run(args):
     violations_path = os.path.join(args.output, "violations")
     doc_path = os.path.join(args.output, "error-file.json")
 
-    mergeds = []
     n_assets = 0
     overall_error = FileError.NONE
     gate_result = None
@@ -345,6 +365,7 @@ def _run(args):
             gate_result = result
             break
         if result.merged is not None:
+            mergeds.append(result.merged)
             # dynamic overwrite by logical partition: this chunk's write
             # replaces only its own partitions' output, never a previous
             # sub-run's rows
@@ -353,11 +374,10 @@ def _run(args):
                 n_logical_partitions=args.partitions,
                 validated_partitions=validated,
             )
-            mergeds.append(result.merged)
             # chunks cover disjoint logical partitions: each asset counts once
             n_assets += result.extra["n_violation_assets"]
         if result.metrics is not None and args.checkpoint:
-            record_partitions(result.metrics, args.checkpoint)
+            lineage = record_partitions(result.metrics, args.checkpoint)
         if not result.passed:
             overall_error = result.file_error
 
@@ -379,16 +399,11 @@ def _run(args):
             # (Lambda.scala:82-84,96-103, DependencyVersionReader.scala:8-13)
             "engine_version": engine_version,
         }))
-        if not preexisting:
-            spark.stop()
         return 1
 
     # fold the manifest into the verdict: a resumed run must not report
     # success while ANY partition's latest recorded verdict is fail
-    manifest_failed = (
-        failed_partitions(spark, args.checkpoint, args.run_id)
-        if args.checkpoint else []
-    )
+    manifest_failed = partitions_with(lineage, args.run_id, passed=False)
     if overall_error == FileError.NONE and manifest_failed:
         overall_error = FileError.SCHEMA_VALIDATION
 
@@ -552,15 +567,6 @@ def _run(args):
         "wall_ms": total_wall_ms,
         "engine_version": engine_version,
     }))
-    for m in mergeds:
-        m.unpersist()  # engine persists each chunk's merge; done with all
-    from tdr_draft_metadata_validator_spark.operators.gates import (
-        release_parse_caches,
-    )
-
-    release_parse_caches()  # drop any CSV parse cache the ingest gate kept
-    if not preexisting:
-        spark.stop()
     return 0 if passed else 1
 
 
